@@ -615,15 +615,21 @@ def incremental_dedup(
     Returns ``(admitted, new_index)``: the batch rows to append (one
     canonical row per new content hash, smallest id wins — deterministic
     under retries, so the writer stays idempotent), and the index rows
-    to add. Plan: one groupBy of (hash, id) within the batch + one
-    left_anti join against the index — the join key is the hash, so AQE
-    broadcasts whichever side is small (a daily batch vs. a bucketed
-    index at scale).
+    to add. Plan: one left_anti join against the index, then the
+    smallest-id pick within each remaining hash group of the batch. The
+    join key is the hash, so AQE broadcasts whichever side is small (a
+    daily batch vs. a bucketed index at scale). The join comes first:
+    it drops whole hash groups, so the result is the same as deduping
+    first, and the window then reuses the join's hash partitioning (a
+    bucketed index's buckets) instead of shuffling the batch again.
     """
     from pyspark.sql import Window
 
     hashed = batch.withColumn("content_hash", hash64(F.col(text_col)))
-
+    if corpus_index is not None:
+        hashed = hashed.join(
+            corpus_index.select("content_hash"), "content_hash", "left_anti"
+        )
     canon = (
         hashed.withColumn(
             "__rk",
@@ -634,10 +640,6 @@ def incremental_dedup(
         .where(F.col("__rk") == 1)
         .drop("__rk")
     )
-    if corpus_index is not None:
-        canon = canon.join(
-            corpus_index.select("content_hash"), "content_hash", "left_anti"
-        )
     return canon, canon.select("content_hash")
 
 

@@ -190,18 +190,14 @@ def rollup_update_txn(
     ONLY touched buckets (manifest-level pruning — the untouched
     buckets' scans are never planned), merge, replace those buckets.
 
-    Concurrency: the read+merge runs INSIDE the optimistic retry loop,
-    pinned to the manifest version it read (``expected_version``). If
-    another writer commits a merge to the table between our read and
-    our commit, the commit conflicts and we re-read the NEW state and
-    re-merge — both writers' batches land (no lost update). Merging
-    from a pre-loop snapshot and letting the commit layer retry would
-    silently overwrite the other writer's fold.
+    Concurrency: the read+merge is a function of the pinned snapshot
+    version, handed to ``replace_partitions``. If another writer
+    commits a merge to the table between our read and our commit, the
+    commit conflicts and the txn layer re-runs the function against
+    the NEW state — both writers' batches land (no lost update).
+    Merging from a snapshot read before the commit and re-basing the
+    result would silently overwrite the other writer's fold.
     """
-    import time as _time
-
-    from terrorblade_spark.txn import CommitConflict
-
     if applied_id is not None and table.applied(applied_id):
         return
     spark = batch.sparkSession
@@ -210,33 +206,19 @@ def rollup_update_txn(
         BUCKET_COL, F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(n_buckets))
     ).persist()
     touched = [r[0] for r in part.select(BUCKET_COL).distinct().collect()]
+    has_hll = distinct_col is not None
+
+    def merged(version: int) -> DataFrame:
+        try:
+            existing = table.read(spark, partition_filter=touched, version=version)
+        except FileNotFoundError:
+            return _merge(part, keys, sum_cols, min_cols, max_cols, has_hll)
+        return _merge(
+            existing.unionByName(part), keys, sum_cols, min_cols, max_cols, has_hll
+        )
+
     try:
-        for attempt in range(12):
-            base = table.latest()
-            base_version = base.version if base else 0
-            if applied_id is not None and base and applied_id in base.applied_ids:
-                return
-            try:
-                existing = table.read(
-                    spark, partition_filter=touched, version=base_version or None
-                )
-                merged = _merge(
-                    existing.unionByName(part),
-                    keys, sum_cols, min_cols, max_cols, distinct_col is not None,
-                )
-            except FileNotFoundError:
-                merged = _merge(
-                    part, keys, sum_cols, min_cols, max_cols, distinct_col is not None
-                )
-            try:
-                table.replace_partitions(
-                    merged, BUCKET_COL,
-                    applied_id=applied_id, expected_version=base_version,
-                )
-                return
-            except CommitConflict:
-                _time.sleep(min(0.05 * (2**attempt), 1.0))
-        raise CommitConflict(f"rollup_update_txn gave up on {table.path}")
+        table.replace_partitions(merged, BUCKET_COL, applied_id=applied_id)
     finally:
         part.unpersist()
 

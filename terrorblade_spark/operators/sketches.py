@@ -391,44 +391,28 @@ def countmin_update_txn(
     re-scanned. Readers estimate from any committed snapshot via
     :func:`countmin_estimate` on ``table.read``.
 
-    Concurrency: read+merge runs inside the optimistic retry pinned to
-    the manifest version it read (``expected_version``) — a concurrent
-    writer's fold conflicts and re-merges rather than being silently
+    Concurrency: read+merge is a function of the pinned snapshot
+    version, so the txn layer re-runs it after a conflict — a
+    concurrent writer's fold is re-merged rather than silently
     overwritten. State is partitioned by sketch ``row`` so the swap is
     a partition replace.
     """
-    import time as _time
-
-    from terrorblade_spark.txn import CommitConflict
-
     if applied_id is not None and table.applied(applied_id):
         return
     spark = batch.sparkSession
     partial = countmin_partial(
         batch, key_col, depth=depth, width=width, seed=seed, group_cols=group_cols
     ).persist()
+
+    def merged(version: int) -> DataFrame:
+        try:
+            existing = table.read(spark, version=version)
+        except FileNotFoundError:
+            return partial
+        return countmin_merge(existing.unionByName(partial), group_cols=group_cols)
+
     try:
-        for attempt in range(12):
-            base = table.latest()
-            base_version = base.version if base else 0
-            if applied_id is not None and base and applied_id in base.applied_ids:
-                return
-            try:
-                existing = table.read(spark, version=base_version or None)
-                merged = countmin_merge(
-                    existing.unionByName(partial), group_cols=group_cols
-                )
-            except FileNotFoundError:
-                merged = partial
-            try:
-                table.replace_partitions(
-                    merged, "row", applied_id=applied_id,
-                    expected_version=base_version,
-                )
-                return
-            except CommitConflict:
-                _time.sleep(min(0.05 * (2**attempt), 1.0))
-        raise CommitConflict(f"countmin_update_txn gave up on {table.path}")
+        table.replace_partitions(merged, "row", applied_id=applied_id)
     finally:
         partial.unpersist()
 
@@ -551,38 +535,26 @@ def quantile_sketch_update_txn(
     persisted state stays <=k rows per group forever, and readers
     estimate from any committed snapshot via
     :func:`quantile_sketch_estimate` on ``table.read``. The read+merge
-    runs inside the optimistic retry pinned to the version it read, so
-    concurrent folds re-merge instead of silently overwriting."""
-    import time as _time
-
-    from terrorblade_spark.txn import CommitConflict
-
+    is a function of the pinned snapshot version, which the txn layer
+    re-runs after a conflict, so concurrent folds re-merge instead of
+    silently overwriting."""
     if applied_id is not None and table.applied(applied_id):
         return
     spark = batch.sparkSession
     partial = quantile_sketch_partial(
         batch, value_col, id_col, k=k, seed=seed, group_cols=group_cols
     ).persist()
+
+    def merged(version: int) -> DataFrame:
+        try:
+            existing = table.read(spark, version=version)
+        except FileNotFoundError:
+            return partial
+        return quantile_sketch_merge(
+            existing.unionByName(partial), k=k, group_cols=group_cols
+        )
+
     try:
-        for attempt in range(12):
-            base = table.latest()
-            base_version = base.version if base else 0
-            if applied_id is not None and base and applied_id in base.applied_ids:
-                return
-            try:
-                existing = table.read(spark, version=base_version or None)
-                merged = quantile_sketch_merge(
-                    existing.unionByName(partial), k=k, group_cols=group_cols
-                )
-            except FileNotFoundError:
-                merged = partial
-            try:
-                table.overwrite(
-                    merged, applied_id=applied_id, expected_version=base_version
-                )
-                return
-            except CommitConflict:
-                _time.sleep(0.05 * (attempt + 1))
-        raise CommitConflict(f"quantile_sketch_update_txn gave up on {table.path}")
+        table.overwrite(merged, applied_id=applied_id)
     finally:
         partial.unpersist()

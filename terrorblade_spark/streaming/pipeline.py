@@ -635,13 +635,7 @@ def txn_content_dedup_writer(
         except FileNotFoundError:
             index = None
         admitted, _ = incremental_dedup(batch_df, index, id_col, text_col)
-        # persist: TxnTable.append counts then writes the plan — without
-        # it the corpus-wide anti-join would run TWICE per batch
-        admitted = admitted.persist()
-        try:
-            corpus_table.append(admitted, applied_id=applied_id)
-        finally:
-            admitted.unpersist()
+        corpus_table.append(admitted, applied_id=applied_id)
 
     return stream.writeStream.foreachBatch(merge)
 

@@ -15,9 +15,10 @@ Design (the public Delta-log recipe):
 * Data files are IMMUTABLE. Every commit writes fresh parquet under a
   unique ``data/<uuid>/`` directory; nothing is ever modified in place.
 * The table state is a MANIFEST: ``_txn/<version>.json`` lists exactly
-  the live entries (path + optional partition value + row count). A
-  reader resolves the highest committed version and reads only the
-  files it names — orphaned data from crashed writers is invisible.
+  the live entries (path + optional partition value + row count +
+  schema). A reader resolves the highest committed version and reads
+  only the files it names — orphaned data from crashed writers is
+  invisible.
 * A commit is one atomic filesystem primitive: the manifest is written
   to a temp name, fsynced, then ``os.link``-ed to its final versioned
   name. ``link`` fails with EEXIST if that version was concurrently
@@ -34,26 +35,35 @@ Design (the public Delta-log recipe):
 
 Scale notes: the manifest holds one entry per live data directory (or
 per partition subdir), not per row — thousands of entries is a small
-JSON document. ``compact()`` bounds log growth by rewriting live data
-and starting a fresh entry list, itself an atomic commit. Reads attach
-each entry's partition value as a literal column, so partition pruning
-happens at MANIFEST level (entries filtered driver-side before any
-scan is planned) — the same effect as hive partition pruning without
-trusting directory-listing consistency.
+JSON document. Each append adds entries, and so does each
+insert-or-ignore ``merge_upsert`` (one entry holding only the new
+rows; the existing entries are never rewritten), so entries grow with
+the number of writes. ``compact()`` is the bound: it rewrites live
+data and starts a fresh entry list, itself an atomic commit. Each
+entry records the schema of its files, so a read infers nothing and
+starts no Spark job, and unpartitioned entries that share a schema
+share a scan (up to Spark's parallel-listing threshold of paths). Reads attach each entry's partition value as a
+literal column, so partition pruning happens at MANIFEST level
+(entries filtered driver-side before any scan is planned) — the same
+effect as hive partition pruning without trusting directory-listing
+consistency.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import Any
+from typing import Any, Callable, Union
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _TXN_DIR = "_txn"
 _VERSION_WIDTH = 20
@@ -70,6 +80,10 @@ _VERSION_WIDTH = 20
 # ordered tail is the equivalent bound.)
 MAX_APPLIED_IDS = 4096
 
+# what a write takes: the rows, or a function of the pinned snapshot
+# version that returns them (see the writes section of TxnTable)
+Data = Union[DataFrame, Callable[[int], DataFrame]]
+
 
 def _cap_ids(ids: list[str]) -> list[str]:
     return ids[-MAX_APPLIED_IDS:] if len(ids) > MAX_APPLIED_IDS else ids
@@ -83,19 +97,40 @@ class CommitConflict(Exception):
 @dataclass
 class Manifest:
     version: int
-    # each entry: {"path": str, "partition": {col: value} | {}, "rows": int}
+    # each entry: {"path": str, "partition": {col: value} | {}, "rows": int,
+    #              "schema": StructType JSON, "ptype": str (partitioned only)}
     entries: list[dict[str, Any]]
     applied_ids: list[str] = field(default_factory=list)
 
     def to_json(self) -> str:
+        # each distinct schema is stored once and entries name it by
+        # key: every commit lists all live entries, so an inline schema
+        # per entry would grow each manifest by a schema per append
+        keys: dict[str, str] = {}
+        entries = []
+        for e in self.entries:
+            if "schema" in e:
+                s = json.dumps(e["schema"], sort_keys=True)
+                e = dict(e, schema=keys.setdefault(s, str(len(keys))))
+            entries.append(e)
         return json.dumps(
             {
                 "version": self.version,
-                "entries": self.entries,
+                "entries": entries,
+                "schemas": {k: json.loads(s) for s, k in keys.items()},
                 "applied_ids": self.applied_ids,
             },
             sort_keys=True,
         )
+
+    @classmethod
+    def from_json(cls, raw: dict[str, Any]) -> Manifest:
+        schemas = raw.get("schemas", {})
+        entries = [
+            dict(e, schema=schemas[e["schema"]]) if "schema" in e else e
+            for e in raw["entries"]
+        ]
+        return cls(raw["version"], entries, raw.get("applied_ids", []))
 
 
 class TxnTable:
@@ -120,8 +155,7 @@ class TxnTable:
 
     def _read_manifest(self, version: int) -> Manifest:
         with open(os.path.join(self._log, f"{version:0{_VERSION_WIDTH}d}.json")) as fh:
-            raw = json.load(fh)
-        return Manifest(raw["version"], raw["entries"], raw.get("applied_ids", []))
+            return Manifest.from_json(json.load(fh))
 
     def latest(self) -> Manifest | None:
         """Resolve the highest committed manifest (None for an empty or
@@ -164,32 +198,42 @@ class TxnTable:
         """Write ``df`` to a fresh immutable data directory; return the
         manifest entries describing it. With a partition column the
         directory is split hive-style so each partition value gets its
-        own entry (manifest-level pruning)."""
+        own entry (manifest-level pruning).
+
+        The plan runs once: row counts come from the written files'
+        parquet footers, not from a separate ``count()`` that would
+        execute every lazy input a second time. Each entry records the
+        schema of its files so readers skip schema inference."""
         dest = os.path.join(self.path, "data", uuid.uuid4().hex)
-        if partition_col is None:
-            n = df.count()
-            if n == 0:
-                return []
-            df.write.mode("errorifexists").parquet(dest)
-            return [{"path": dest, "partition": {}, "rows": n}]
-        ptype = dict(df.dtypes)[partition_col]
-        df.write.mode("errorifexists").partitionBy(partition_col).parquet(dest)
+        writer = df.write.mode("errorifexists")
+        schema = df.schema
+        if partition_col is not None:
+            ptype = dict(df.dtypes)[partition_col]
+            writer = writer.partitionBy(partition_col)
+            schema = StructType([f for f in schema if f.name != partition_col])
+        writer.parquet(dest)
+        layout = [(dest, {"partition": {}})]
+        if partition_col is not None:
+            # the partition column's declared type: readers reattach
+            # with THIS cast, so a string-keyed table round-trips (a
+            # hard-coded int cast would null it)
+            layout = [
+                (os.path.join(dest, name),
+                 {"partition": dict([name.split("=", 1)]), "ptype": ptype})
+                for name in sorted(os.listdir(dest)) if "=" in name
+            ]
         entries = []
-        for name in sorted(os.listdir(dest)):
-            if "=" not in name:
-                continue
-            col, _, raw = name.partition("=")
-            entries.append(
-                {
-                    "path": os.path.join(dest, name),
-                    "partition": {col: raw},
-                    "rows": -1,
-                    # the partition column's declared type: readers
-                    # reattach with THIS cast, so a string-keyed table
-                    # round-trips (a hard-coded int cast would null it)
-                    "ptype": ptype,
-                }
+        for path, entry in layout:
+            rows = sum(
+                pq.read_metadata(os.path.join(path, n)).num_rows
+                for n in os.listdir(path) if n.endswith(".parquet")
             )
+            if rows:
+                entries.append(
+                    dict(entry, path=path, rows=rows, schema=schema.jsonValue())
+                )
+        if not entries:
+            shutil.rmtree(dest)  # nothing to publish; never referenced
         return entries
 
     # -- reads ---------------------------------------------------------------
@@ -203,11 +247,15 @@ class TxnTable:
     ) -> DataFrame:
         """Read the current snapshot — or, with ``version``, any past
         committed snapshot (time travel: data files are immutable and
-        manifests name exactly the files live at that version).
+        manifests name exactly the files live at that version; version
+        0 is the empty table before the first commit).
         ``partition_filter`` (a set of partition values, compared as
         strings) prunes entries at the manifest — the pruned scans are
         never planned at all."""
-        m = self._read_manifest(version) if version is not None else self.latest()
+        if version is None:
+            m = self.latest()
+        else:
+            m = self._read_manifest(version) if version else None
         entries = m.entries if m else []
         if partition_filter is not None:
             wanted = {str(v) for v in partition_filter}
@@ -217,7 +265,29 @@ class TxnTable:
             ]
         if not entries:
             raise FileNotFoundError(f"txn table {self.path} is empty")
-        parts = [self._entry_df(spark, e, partition_type) for e in entries]
+        return self._scan(spark, entries, partition_type)
+
+    def _scan(
+        self,
+        spark: SparkSession,
+        entries: list[dict[str, Any]],
+        partition_type: str = "int",
+    ) -> DataFrame:
+        """``entries`` as one DataFrame. Unpartitioned entries that
+        record the same schema share a scan; every other entry is its
+        own scan. A scan takes at most the parallel-listing threshold
+        of paths: above it, Spark lists the paths with a job."""
+        groups: dict[str, list[dict[str, Any]]] = {}
+        for i, e in enumerate(entries):
+            shared = "schema" in e and not e["partition"]
+            key = json.dumps(e["schema"], sort_keys=True) if shared else f"#{i}"
+            groups.setdefault(key, []).append(e)
+        n = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        parts = [
+            self._entry_df(spark, g[i : i + n], partition_type)
+            for g in groups.values()
+            for i in range(0, len(g), n)
+        ]
         # allowMissingColumns = additive schema evolution: entries
         # written before a column existed read it as typed nulls (the
         # Delta mergeSchema read behavior); renames/drops/type changes
@@ -227,13 +297,22 @@ class TxnTable:
         )
 
     def _entry_df(
-        self, spark: SparkSession, e: dict[str, Any], partition_type: str = "int"
+        self,
+        spark: SparkSession,
+        group: list[dict[str, Any]],
+        partition_type: str = "int",
     ) -> DataFrame:
-        """One manifest entry as a DataFrame: partitionBy strips the
+        """One scan over manifest entries that share a layout. It reads
+        with the schema the writer recorded, so no inference job runs
+        (entries predating that field infer it). partitionBy strips the
         partition column from the data files, so reattach it from the
         entry with the type the WRITER recorded (fallback: the caller's
         hint, for manifests predating the ptype field)."""
-        part_df = spark.read.parquet(e["path"])
+        e = group[0]
+        reader = spark.read
+        if "schema" in e:
+            reader = reader.schema(StructType.fromJson(e["schema"]))
+        part_df = reader.parquet(*(g["path"] for g in group))
         for col, raw in e["partition"].items():
             cast_to = e.get("ptype", partition_type)
             val = None if raw == "__HIVE_DEFAULT_PARTITION__" else raw
@@ -247,17 +326,34 @@ class TxnTable:
         return m is not None and applied_id in m.applied_ids
 
     # -- writes --------------------------------------------------------------
+    #
+    # ``append``, ``overwrite`` and ``replace_partitions`` take either a
+    # DataFrame or a function of the pinned snapshot version (0 = empty
+    # table) that returns one. Use a function when the data depends on
+    # the table itself (read-merge-write): on a conflict it is re-run
+    # against the new tip, so a competing commit is merged, not lost.
 
-    def _retrying_commit(self, build, max_attempts: int = 12) -> Manifest:
-        """Optimistic-concurrency loop: ``build(latest_manifest)``
-        returns the next manifest (or None to no-op); on conflict the
-        log is re-read and ``build`` re-runs against the new tip."""
+    def _retrying_commit(
+        self, build, applied_id: str | None = None, max_attempts: int = 12
+    ) -> Manifest | None:
+        """The one optimistic-concurrency loop. Each attempt pins the
+        latest manifest; ``build(base)`` returns the next snapshot's
+        entries (or None to commit nothing), which commit at base+1
+        together with ``applied_id``. On conflict the log is re-read
+        and ``build`` re-runs against the new tip. A replay whose
+        ``applied_id`` is already committed stops before ``build``.
+        Returns the committed manifest, or None if nothing committed."""
         for attempt in range(max_attempts):
             base = self.latest()
-            nxt = build(base)
-            if nxt is None:
-                return base
-            nxt.version = (base.version + 1) if base else 1
+            ids = list(base.applied_ids) if base else []
+            if applied_id is not None and applied_id in ids:
+                return None
+            entries = build(base)
+            if entries is None:
+                return None
+            if applied_id is not None:
+                ids.append(applied_id)
+            nxt = Manifest((base.version + 1) if base else 1, entries, _cap_ids(ids))
             try:
                 self._commit(nxt)
                 return nxt
@@ -265,84 +361,68 @@ class TxnTable:
                 time.sleep(min(0.05 * (2**attempt), 1.0))
         raise CommitConflict(f"gave up after {max_attempts} attempts on {self.path}")
 
+    def _new_entries(self, data: Data, partition_col: str | None):
+        """``base -> entries`` for one write inside the commit loop. A
+        DataFrame is written on the first attempt only; a conflict
+        re-bases the same entries onto the new tip. A function is
+        re-run against each attempt's pinned version and written
+        again, because its output depends on the snapshot it read."""
+        if not isinstance(data, DataFrame):
+            return lambda base: self._write_data(
+                data(base.version if base else 0), partition_col
+            )
+        written: list[list[dict[str, Any]]] = []
+
+        def once(base: Manifest | None) -> list[dict[str, Any]]:
+            if not written:
+                written.append(self._write_data(data, partition_col))
+            return written[0]
+
+        return once
+
     def append(
         self,
-        df: DataFrame,
+        data: Data,
         applied_id: str | None = None,
         partition_col: str | None = None,
     ) -> None:
-        """Atomically append ``df``'s rows (new files + manifest swap).
-        With ``applied_id``, the append is exactly-once: a replay whose
-        id is already committed is a no-op. With ``partition_col`` the
-        new files land hive-split with per-partition manifest entries —
-        appends into a partitioned table keep manifest-level pruning
-        (an unpartitioned entry would be scanned by every filtered
-        read until the next compact)."""
-        if applied_id is not None and self.applied(applied_id):
-            return
-        new_entries = self._write_data(df, partition_col)
-
-        def build(base: Manifest | None) -> Manifest | None:
-            if applied_id is not None and base and applied_id in base.applied_ids:
-                return None  # lost a race against our own replay twin
-            entries = (list(base.entries) if base else []) + new_entries
-            ids = list(base.applied_ids) if base else []
-            if applied_id is not None:
-                ids.append(applied_id)
-            return Manifest(0, entries, _cap_ids(ids))
-
-        self._retrying_commit(build)
+        """Atomically append ``data``'s rows (new files + manifest
+        swap). With ``applied_id``, the append is exactly-once: a
+        replay whose id is already committed is a no-op. With
+        ``partition_col`` the new files land hive-split with
+        per-partition manifest entries — appends into a partitioned
+        table keep manifest-level pruning (an unpartitioned entry would
+        be scanned by every filtered read until the next compact)."""
+        new = self._new_entries(data, partition_col)
+        self._retrying_commit(
+            lambda base: (list(base.entries) if base else []) + new(base), applied_id
+        )
 
     def overwrite(
         self,
-        df: DataFrame,
+        data: Data,
         applied_id: str | None = None,
         partition_col: str | None = None,
-        expected_version: int | None = None,
     ) -> None:
         """Atomically replace the whole table contents. With
         ``partition_col`` the new snapshot lands hive-split with
         per-partition entries — the full-rebuild form for partitioned
         tables (unlike ``replace_partitions``, values absent from
-        ``df`` do NOT survive: an index retrain with fewer partitions
-        leaves no stale ones).
-
-        ``expected_version`` is the same optimistic-concurrency handle
-        as on ``replace_partitions``: read-merge-overwrite callers pin
-        the version they merged against and get CommitConflict (to
-        re-read and re-merge) if another writer landed in between."""
-        if applied_id is not None and self.applied(applied_id):
-            return
-        new_entries = self._write_data(df, partition_col)
-
-        def build(base: Manifest | None) -> Manifest | None:
-            if expected_version is not None:
-                tip = base.version if base else 0
-                if tip != expected_version:
-                    raise CommitConflict(
-                        f"{self.path} moved to v{tip} (expected v{expected_version})"
-                    )
-            if applied_id is not None and base and applied_id in base.applied_ids:
-                return None
-            ids = list(base.applied_ids) if base else []
-            if applied_id is not None:
-                ids.append(applied_id)
-            return Manifest(0, new_entries, _cap_ids(ids))
-
-        self._retrying_commit(build)
+        the data do NOT survive: an index retrain with fewer partitions
+        leaves no stale ones)."""
+        self._retrying_commit(self._new_entries(data, partition_col), applied_id)
 
     def replace_partitions(
         self,
-        df: DataFrame,
+        data: Data,
         partition_col: str,
         applied_id: str | None = None,
-        expected_version: int | None = None,
     ) -> None:
-        """Atomically replace exactly the partitions present in ``df``
-        (dynamic partition overwrite with a crash-safe swap): entries
-        for untouched partition values survive unchanged; the touched
-        values' old entries are dropped and the new files take over —
-        all in one manifest commit.
+        """Atomically replace exactly the partitions present in
+        ``data`` (dynamic partition overwrite with a crash-safe swap):
+        entries for untouched partition values survive unchanged; the
+        touched values' old entries are dropped and the new files take
+        over — all in one manifest commit.
 
         Entries written WITHOUT partitioning (``append``/``overwrite``,
         or a ``compact`` of a mixed snapshot) may hold live rows for the
@@ -353,30 +433,12 @@ class TxnTable:
         ``partition_col`` (raises ValueError otherwise — refusing is
         better than silently leaving stale rows live). Partition values
         are compared as their hive directory strings, which is exact for
-        the int/simple-string keys used here.
+        the int/simple-string keys used here."""
+        new = self._new_entries(data, partition_col)
 
-        ``expected_version`` is the optimistic-concurrency handle for
-        read-merge-replace callers (``rollup_update_txn``): the commit
-        succeeds only if the table tip is still exactly that version
-        (0 = expected empty). Any concurrent commit in between raises
-        CommitConflict to the CALLER so it can re-read and re-merge —
-        retrying internally here would silently overwrite the other
-        writer's merge (lost update)."""
-        if applied_id is not None and self.applied(applied_id):
-            return
-        spark = df.sparkSession
-        new_entries = self._write_data(df, partition_col)
-        touched = {v for e in new_entries for v in e["partition"].values()}
-
-        def build(base: Manifest | None) -> Manifest | None:
-            if expected_version is not None:
-                tip = base.version if base else 0
-                if tip != expected_version:
-                    raise CommitConflict(
-                        f"{self.path} moved to v{tip} (expected v{expected_version})"
-                    )
-            if applied_id is not None and base and applied_id in base.applied_ids:
-                return None
+        def build(base: Manifest | None) -> list[dict[str, Any]]:
+            new_entries = new(base)
+            touched = {v for e in new_entries for v in e["partition"].values()}
             old = base.entries if base else []
             kept = [
                 e for e in old
@@ -385,10 +447,7 @@ class TxnTable:
             unpart = [e for e in old if not e["partition"]]
             split_entries: list[dict[str, Any]] = []
             if unpart and touched:
-                stale = reduce(
-                    lambda a, b: a.unionByName(b),
-                    [spark.read.parquet(e["path"]) for e in unpart],
-                )
+                stale = self._scan(SparkSession.active(), unpart)
                 if partition_col not in stale.columns:
                     raise ValueError(
                         f"txn table {self.path} has unpartitioned entries without "
@@ -404,12 +463,9 @@ class TxnTable:
                 split_entries = self._write_data(remainder, partition_col)
             elif unpart:
                 kept = unpart + kept
-            ids = list(base.applied_ids) if base else []
-            if applied_id is not None:
-                ids.append(applied_id)
-            return Manifest(0, kept + split_entries + new_entries, _cap_ids(ids))
+            return kept + split_entries + new_entries
 
-        self._retrying_commit(build)
+        self._retrying_commit(build, applied_id)
 
     def merge_upsert(
         self,
@@ -420,45 +476,35 @@ class TxnTable:
     ) -> None:
         """MERGE: insert-or-ignore on ``keys`` (version_col=None — the
         S5 idempotent append) or insert-or-replace keeping the highest
-        ``version_col`` per key (S6 upsert). Implemented as
-        read-snapshot -> plan-level merge -> atomic overwrite; the
-        snapshot is pinned by the manifest, so a concurrent commit is
-        detected (version conflict) and the merge re-runs against the
-        new snapshot rather than silently clobbering it."""
-        if applied_id is not None and self.applied(applied_id):
-            return
+        ``version_col`` per key (S6 upsert).
+
+        Insert-or-ignore appends only the rows whose key is not in the
+        pinned snapshot (an anti-join): existing entries stay untouched,
+        so each merge adds at most one entry and writes only new rows.
+        Insert-or-replace overwrites the snapshot with the merged plan.
+        Either way the merge is a function of the pinned version, so a
+        concurrent commit makes the merge re-run against the new
+        snapshot rather than silently clobbering it."""
         from terrorblade_spark.operators.relational import (
-            idempotent_append,
+            anti_join_new,
             upsert_latest,
         )
 
-        for attempt in range(12):
-            base = self.latest()
-            if base is None or not base.entries:
-                merged = new_rows
-            else:
-                existing = self.read(new_rows.sparkSession)
-                if applied_id is not None and applied_id in base.applied_ids:
-                    return
-                if version_col is None:
-                    merged = idempotent_append(new_rows, existing, keys)
-                else:
-                    merged = upsert_latest(new_rows, existing, keys, version_col)
-            new_entries = self._write_data(merged, None)
-            nxt = Manifest(
-                (base.version + 1) if base else 1,
-                new_entries,
-                _cap_ids(
-                    (list(base.applied_ids) if base else [])
-                    + ([applied_id] if applied_id is not None else [])
-                ),
-            )
+        spark = new_rows.sparkSession
+
+        def merged(version: int) -> DataFrame:
             try:
-                self._commit(nxt)
-                return
-            except CommitConflict:
-                time.sleep(min(0.05 * (2**attempt), 1.0))
-        raise CommitConflict(f"merge_upsert gave up on {self.path}")
+                existing = self.read(spark, version=version)
+            except FileNotFoundError:
+                return new_rows
+            if version_col is None:
+                return anti_join_new(new_rows, existing, keys)
+            return upsert_latest(new_rows, existing, keys, version_col)
+
+        if version_col is None:
+            self.append(merged, applied_id)
+        else:
+            self.overwrite(merged, applied_id)
 
     def delete_where(
         self,
@@ -513,23 +559,19 @@ class TxnTable:
         matches,
         keeps,
         applied_id: str | None,
-        max_attempts: int = 12,
     ) -> dict[str, int]:
         """Shared delete engine. Each attempt probes and rewrites
-        against ONE pinned snapshot and commits only if the tip has not
-        moved — a concurrent append of rows that would also match is
-        re-probed on the retry rather than silently surviving (the
-        rollup_update_txn conflict recipe)."""
-        if applied_id is not None and self.applied(applied_id):
-            return {"rows_deleted": 0, "entries_rewritten": 0, "entries_kept": 0}
-        for attempt in range(max_attempts):
-            base = self.latest()
+        against ONE pinned snapshot — a concurrent append of rows that
+        would also match is re-probed on the retry rather than silently
+        surviving."""
+        stats: dict[str, int] = {}
+
+        def build(base: Manifest | None) -> list[dict[str, Any]] | None:
+            stats.clear()
             if base is None or not base.entries:
-                return {"rows_deleted": 0, "entries_rewritten": 0, "entries_kept": 0}
-            if applied_id is not None and applied_id in base.applied_ids:
-                return {"rows_deleted": 0, "entries_rewritten": 0, "entries_kept": 0}
+                return None
             parts = [
-                self._entry_df(spark, e).withColumn("__entry", F.lit(i))
+                self._entry_df(spark, [e]).withColumn("__entry", F.lit(i))
                 for i, e in enumerate(base.entries)
             ]
             snap = reduce(
@@ -542,59 +584,39 @@ class TxnTable:
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            ids = list(base.applied_ids)
-            if applied_id is not None:
-                ids.append(applied_id)
+            stats.update(
+                rows_deleted=sum(hits.values()),
+                entries_rewritten=len(hits),
+                entries_kept=len(base.entries) - len(hits),
+            )
             if not hits:
-                if applied_id is None:
-                    return {
-                        "rows_deleted": 0,
-                        "entries_rewritten": 0,
-                        "entries_kept": len(base.entries),
-                    }
-                nxt = Manifest(base.version + 1, list(base.entries), _cap_ids(ids))
-            else:
-                touched = set(hits)
-                t_unpart = [i for i in touched if not base.entries[i]["partition"]]
-                t_part = [i for i in touched if base.entries[i]["partition"]]
-                new_entries: list[dict[str, Any]] = []
-                if t_unpart:
-                    df = keeps(
-                        snap.where(F.col("__entry").isin(t_unpart))
-                    ).drop("__entry")
-                    new_entries += self._write_data(df, None)
-                if t_part:
-                    # group touched entries by their partition column: a
-                    # table mixing partition columns across entries must
-                    # not re-home one column's rows under another's
-                    # partitioning (that would break manifest pruning)
-                    by_pcol: dict[str, list[int]] = {}
-                    for i in t_part:
-                        pc = next(iter(base.entries[i]["partition"]))
-                        by_pcol.setdefault(pc, []).append(i)
-                    for pc, idxs in sorted(by_pcol.items()):
-                        df = keeps(
-                            snap.where(F.col("__entry").isin(idxs))
-                        ).drop("__entry")
-                        new_entries += self._write_data(df, pc)
-                kept = [
-                    e for i, e in enumerate(base.entries) if i not in touched
-                ]
-                nxt = Manifest(
-                    base.version + 1, kept + new_entries, _cap_ids(ids)
-                )
-            try:
-                self._commit(nxt)
-                return {
-                    "rows_deleted": sum(hits.values()),
-                    "entries_rewritten": len(hits),
-                    "entries_kept": len(base.entries) - len(hits),
-                }
-            except CommitConflict:
-                time.sleep(min(0.05 * (2**attempt), 1.0))
-        raise CommitConflict(
-            f"delete gave up after {max_attempts} attempts on {self.path}"
-        )
+                # nothing to rewrite; commit only to record the applied id
+                return None if applied_id is None else list(base.entries)
+            t_unpart = [i for i in hits if not base.entries[i]["partition"]]
+            t_part = [i for i in hits if base.entries[i]["partition"]]
+            new_entries: list[dict[str, Any]] = []
+            if t_unpart:
+                df = keeps(snap.where(F.col("__entry").isin(t_unpart))).drop("__entry")
+                new_entries += self._write_data(df, None)
+            if t_part:
+                # group touched entries by their partition column: a
+                # table mixing partition columns across entries must
+                # not re-home one column's rows under another's
+                # partitioning (that would break manifest pruning)
+                by_pcol: dict[str, list[int]] = {}
+                for i in t_part:
+                    pc = next(iter(base.entries[i]["partition"]))
+                    by_pcol.setdefault(pc, []).append(i)
+                for pc, idxs in sorted(by_pcol.items()):
+                    df = keeps(snap.where(F.col("__entry").isin(idxs))).drop("__entry")
+                    new_entries += self._write_data(df, pc)
+            kept = [e for i, e in enumerate(base.entries) if i not in hits]
+            return kept + new_entries
+
+        committed = self._retrying_commit(build, applied_id)
+        if committed is None and applied_id is not None:
+            stats.clear()  # a replay deletes nothing, whatever an earlier attempt probed
+        return {"rows_deleted": 0, "entries_rewritten": 0, "entries_kept": 0} | stats
 
     def compact(self, spark: SparkSession) -> None:
         """Rewrite the live snapshot into one fresh data directory and
@@ -620,10 +642,10 @@ class TxnTable:
         snap = self.read(spark)
         new_entries = self._write_data(snap, keep_col)
 
-        def build(base: Manifest | None) -> Manifest | None:
+        def build(base: Manifest | None) -> list[dict[str, Any]] | None:
             if base is not None and base.version != m.version:
                 return None  # someone committed since; skip this cycle
-            return Manifest(0, new_entries, list(m.applied_ids))
+            return new_entries
 
         self._retrying_commit(build)
 
@@ -653,8 +675,6 @@ class TxnTable:
         filesystem IO over the table root — O(live data dirs), no
         Spark job; on object stores this is the same LIST + DELETE
         sweep every log-structured format runs."""
-        import shutil
-
         if retain_versions < 1:
             raise ValueError("retain_versions must be >= 1")
         versions = self._versions()

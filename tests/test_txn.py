@@ -279,14 +279,25 @@ def test_replace_partitions_without_partition_col_raises(spark, tmp_path):
         t.replace_partitions(_df(spark, [(1, 2, 555)], "b int, k long, v long"), "b")
 
 
-def test_replace_partitions_expected_version_conflict(spark, tmp_path):
+def test_replace_partitions_snapshot_fn_reruns_on_conflict(spark, tmp_path):
+    """A write given as a function of the pinned snapshot is re-run
+    against the new tip when a competing commit lands first: both
+    writes count (re-basing the first result would lose one)."""
+    sch = "b int, k long, v long"
     t = TxnTable(str(tmp_path / "t"))
-    df = _df(spark, [(1, 2, 555)], "b int, k long, v long")
-    t.replace_partitions(df, "b")
-    with pytest.raises(CommitConflict):
-        t.replace_partitions(df, "b", expected_version=0)  # tip is v1, not empty
-    t.replace_partitions(df, "b", expected_version=1)  # matching tip commits
-    assert t.latest().version == 2
+    t.replace_partitions(_df(spark, [(1, 2, 10)], sch), "b")
+    calls = []
+
+    def add_five(version):
+        calls.append(version)
+        if len(calls) == 1:  # a competing writer lands v2 mid-merge
+            t.replace_partitions(_df(spark, [(1, 2, 110)], sch), "b")
+        return t.read(spark, version=version).withColumn("v", F.col("v") + 5)
+
+    t.replace_partitions(add_five, "b")
+    assert calls == [1, 2]
+    assert t.latest().version == 3
+    assert [(r["b"], r["k"], r["v"]) for r in t.read(spark).collect()] == [(1, 2, 115)]
 
 
 def test_applied_ids_bounded_per_manifest(spark, tmp_path):
@@ -419,6 +430,59 @@ def test_concurrent_merge_upsert_no_lost_or_duplicate_keys(spark, tmp_path):
     keys = sorted(r["k"] for r in rows)
     assert keys == list(range(0, 50))  # union, no loss
     assert len(keys) == len(set(keys))  # no duplicates
+
+
+def test_merge_insert_or_ignore_appends_only_new_rows(spark, tmp_path):
+    """Insert-or-ignore leaves every existing entry in place and adds
+    one entry holding exactly the new keys."""
+    t = TxnTable(str(tmp_path / "t"))
+    t.append(_df(spark, [(1, 10), (2, 20)]))
+    t.append(_df(spark, [(3, 30)]))
+    before = t.latest().entries
+    t.merge_upsert(_df(spark, [(2, 99), (3, 99), (4, 40), (5, 50)]), keys=["k"])
+    after = t.latest().entries
+    assert after[: len(before)] == before
+    assert len(after) == len(before) + 1 and after[-1]["rows"] == 2
+    got = sorted((r["k"], r["v"]) for r in t.read(spark).collect())
+    assert got == [(1, 10), (2, 20), (3, 30), (4, 40), (5, 50)]
+
+
+def test_write_runs_input_plan_once(spark, tmp_path):
+    """A txn write executes its lazy input once: no separate count()
+    pass before the write."""
+    from pyspark.sql.types import BooleanType
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def keep(k):
+        seen.add(1)
+        return True
+
+    keep_udf = F.udf(keep, BooleanType())
+    t = TxnTable(str(tmp_path / "t"))
+    t.append(spark.range(10).where(keep_udf("id")))
+    assert seen.value == 10
+    assert t.latest().entries[0]["rows"] == 10
+
+
+def test_read_of_many_entries_starts_no_job(spark, tmp_path):
+    """Entries carry their schema, so planning a read infers nothing;
+    and no scan holds more paths than Spark lists without a job."""
+    t = TxnTable(str(tmp_path / "t"))
+    for i in range(4):
+        t.append(_df(spark, [(i, i * 10)]))
+    t.append(_df(spark, [(9, 90)]), partition_col="k")
+    sc, conf = spark.sparkContext, "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    sc.setJobGroup("txn-read-plan", "txn-read-plan")
+    try:
+        t.read(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(conf, prev)
+    assert sc.statusTracker().getJobIdsForGroup("txn-read-plan") == []
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [0, 1, 2, 3, 9]
 
 
 def test_read_with_additive_schema_evolution(spark, tmp_path):
