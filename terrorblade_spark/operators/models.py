@@ -1,9 +1,11 @@
 """Model persistence: fitted artifacts (n-gram LM tables, BM25 index
 relations, IVF centroids, PQ codebooks) are all plain DataFrames, so
-persistence is parquet + a small JSON sidecar for scalar params. Fit
-once on the corpus snapshot, score every ingest batch from the saved
-model — refitting per batch is both wasted compute and a moving
-target for comparability.
+persistence is parquet + a small JSON sidecar for scalar params (the
+IVF index, which also takes incremental appends, commits its vectors
+and centroids through ``txn.TxnTable``). Fit once on the corpus
+snapshot, score every ingest batch from the saved model — refitting
+per batch is both wasted compute and a moving target for
+comparability.
 """
 
 from __future__ import annotations
@@ -86,30 +88,6 @@ def load_bm25(spark: SparkSession, path: str) -> Bm25Index:
     )
 
 
-def save_ivf(assigned, centroids, path: str) -> None:
-    """Persist an IVF index (``ivf_build`` output): vectors land
-    PARTITIONED BY list_id — the at-rest form of ``ivf_topk``'s nprobe
-    semi-join, so a query reads only its probed lists' files."""
-    assigned.write.mode("overwrite").partitionBy("list_id").parquet(
-        f"{path}/assigned"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-    _write_meta(assigned.sparkSession, path, {"kind": "ivf"})
-
-
-def load_ivf(spark: SparkSession, path: str):
-    """Load an IVF index as ``(assigned, centroids)`` for
-    ``ivf_topk``; centroids are tiny and persisted for reuse across
-    queries."""
-    meta = _read_meta(spark, path)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"{path} holds {meta.get('kind')!r}, not an ivf index")
-    return (
-        spark.read.parquet(f"{path}/assigned"),
-        spark.read.parquet(f"{path}/centroids").persist(),
-    )
-
-
 def save_ivfpq(encoded, centroids, codebooks, path: str, m: int) -> None:
     """Persist a residual IVF-PQ index (``ivfpq_build`` output). The
     encoded relation lands PARTITIONED BY list_id, so a serving query's
@@ -142,37 +120,39 @@ def load_ivfpq(spark: SparkSession, path: str):
     )
 
 
-# -- transactional IVF index: atomic persistence + incremental appends --------
-# The serving-system lifecycle the plain save_ivf layout lacks: new
-# vectors arrive continuously, and re-clustering the corpus per batch
-# is absurd — production IVF systems (the FAISS add-after-train model)
-# keep the trained coarse quantizer FIXED and route new vectors to
-# their nearest existing list, rebuilding centroids only on scheduled
-# retrains when drift accumulates.
+# -- IVF index: atomic persistence + incremental appends ---------------------
+# New vectors arrive continuously, and re-clustering the corpus per
+# batch is absurd — production IVF systems (the FAISS add-after-train
+# model) keep the trained coarse quantizer FIXED and route new vectors
+# to their nearest existing list, rebuilding centroids only on
+# scheduled retrains when drift accumulates.
 
 
-def save_ivf_txn(assigned, centroids, path: str) -> None:
-    """Persist an IVF index transactionally: vectors in a TxnTable
-    partitioned by list_id (manifest-level nprobe pruning + atomic
-    visibility), centroids in their own TxnTable snapshot. A retrain at
-    the same path is a FULL overwrite — lists absent from the new
-    quantizer (n_lists shrank) leave no stale vectors behind, which a
-    dynamic partition replace would."""
+def save_ivf(assigned, centroids, path: str) -> None:
+    """Persist an IVF index (``ivf_build`` output) transactionally:
+    vectors in a TxnTable partitioned by list_id — the at-rest form of
+    ``ivf_topk``'s nprobe semi-join (manifest-level pruning, so a query
+    reads only its probed lists' files) with atomic visibility —
+    centroids in their own TxnTable snapshot. A retrain at the same
+    path is a FULL overwrite — lists absent from the new quantizer
+    (n_lists shrank) leave no stale vectors behind, which a dynamic
+    partition replace would."""
     from terrorblade_spark.txn import TxnTable
 
     TxnTable(f"{path}/assigned").overwrite(assigned, partition_col="list_id")
     TxnTable(f"{path}/centroids").overwrite(centroids)
-    _write_meta(assigned.sparkSession, path, {"kind": "ivf_txn"})
+    _write_meta(assigned.sparkSession, path, {"kind": "ivf"})
 
 
-def load_ivf_txn(spark: SparkSession, path: str):
-    """Load as ``(assigned, centroids)`` — drop-in for ``ivf_topk`` /
-    ``ivf_knn_join`` with ``list_col='list_id'``."""
+def load_ivf(spark: SparkSession, path: str):
+    """Load an IVF index as ``(assigned, centroids)`` for ``ivf_topk``
+    / ``ivf_knn_join`` with ``list_col='list_id'``; centroids are tiny
+    and persisted for reuse across queries."""
     from terrorblade_spark.txn import TxnTable
 
     meta = _read_meta(spark, path)
-    if meta.get("kind") != "ivf_txn":
-        raise ValueError(f"{path} holds {meta.get('kind')!r}, not an ivf_txn index")
+    if meta.get("kind") != "ivf":
+        raise ValueError(f"{path} holds {meta.get('kind')!r}, not an ivf index")
     return (
         TxnTable(f"{path}/assigned").read(spark, partition_type="int"),
         TxnTable(f"{path}/centroids").read(spark).persist(),
@@ -187,7 +167,7 @@ def ivf_append_txn(
     vec_col: str = "embedding",
     applied_id: str | None = None,
 ) -> None:
-    """Incrementally add vectors to a persisted ``ivf_txn`` index:
+    """Incrementally add vectors to an index persisted by ``save_ivf``:
     assign each to its nearest TRAINED centroid (squared-L2, the
     k-means metric — broadcast centroids, narrow (id, list, dist)
     pipeline, payloads never multiply), then append ONLY the touched

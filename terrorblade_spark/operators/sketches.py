@@ -386,7 +386,7 @@ def countmin_update_txn(
     table (``txn.TxnTable``) — the incremental-ingest shape the sketch
     exists for: per-batch partials land EXACTLY ONCE (the cellwise
     merge and the applied-batch marker are one atomic manifest swap,
-    the rollup_update_txn recipe), and the persisted state stays
+    the rollup_update recipe), and the persisted state stays
     depth*width rows per group forever while the raw stream is never
     re-scanned. Readers estimate from any committed snapshot via
     :func:`countmin_estimate` on ``table.read``.

@@ -314,8 +314,8 @@ def build_mcp_server(tb: TerrorbladeSpark):
     def hybrid_search(query: str, top_k: int = 10):
         return d.call("hybrid_search", query=query, top_k=top_k)
 
-    def random_large_cluster(min_size: int = 5, chat_id: int | None = None):
-        return d.call("random_large_cluster", min_size=min_size, chat_id=chat_id)
+    def random_large_cluster(min_size: int = 10, seed: str = "v1"):
+        return d.call("random_large_cluster", min_size=min_size, seed=seed)
 
     impls = {f.__name__: f for f in (
         vector_search, cluster_search, get_cluster, text_search,

@@ -7,8 +7,8 @@ The reference's streaming-shaped semantics, as real streams:
   files are the increment; exactly-once per file);
 - idempotent late/duplicate handling via PK INSERT OR IGNORE
   (telegram_database.py:926-928)  ->  ``foreachBatch`` anti-join merge
-  (operators.relational.idempotent_append) or dropDuplicates within
-  the watermark;
+  into a ``txn.TxnTable`` (``dedup_merge_writer``) or dropDuplicates
+  within the watermark;
 - gap sessionization (E2)  ->  ``session_window`` aggregation with an
   event-time watermark bounding state.
 
@@ -16,6 +16,11 @@ All builders return unstarted streaming DataFrames/writers so callers
 choose trigger + sink; ``run_sessionization_batch`` drives the whole
 thing with ``availableNow`` for tests/bench (processes the backlog,
 then stops — same plan a 24/7 cluster job would run).
+
+Every stateful sink persists through ``txn.TxnTable`` and commits its
+rows together with a ``<writer_id>/batch_<id>`` marker, so a replayed
+micro-batch is a no-op (the drift monitor's report is the exception:
+a plain parquet append).
 """
 
 from __future__ import annotations
@@ -72,34 +77,24 @@ def session_aggregate(
     )
 
 
-def dedup_merge_writer(stream: DataFrame, target_path: str, keys: list[str]):
-    """S5 idempotent sink as a stream: each micro-batch is anti-joined
-    against the current target before append (INSERT OR IGNORE)."""
+def dedup_merge_writer(stream: DataFrame, table, keys: list[str], writer_id: str):
+    """S5 idempotent sink as a stream: each micro-batch is merged into
+    a ``txn.TxnTable`` as INSERT OR IGNORE on ``keys``
+    (``merge_upsert``: a null-safe anti-join against the pinned
+    snapshot, then an append of only the new rows), and the batch id
+    commits with the rows. A target that cannot be read fails the
+    stream; only an empty table means "first batch". ``writer_id``:
+    see ``txn_append_writer``."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        from terrorblade_spark.operators.relational import anti_join_new
-
-        spark = batch_df.sparkSession
         # WITHIN-batch dedup first: the same key delivered twice in one
         # trigger passes any anti-join against the target (neither copy
         # is there yet) and both would land permanently
-        batch_df = batch_df.dropDuplicates(list(keys))
-        try:
-            existing = spark.read.parquet(target_path).select(*keys)
-            # null-safe helper: plain on=keys equality re-admits
-            # NULL-keyed rows on every redelivery
-            fresh = anti_join_new(batch_df, existing, keys)
-        except AnalysisException as e:
-            # ONLY a genuinely missing target means "first batch". Any
-            # other failure (transient IO, schema mismatch) must raise —
-            # appending without the anti-join would silently break the
-            # INSERT-OR-IGNORE idempotency contract.
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            fresh = batch_df
-        fresh.write.mode("append").parquet(target_path)
+        table.merge_upsert(
+            batch_df.dropDuplicates(list(keys)),
+            list(keys),
+            applied_id=f"{writer_id}/batch_{batch_id}",
+        )
 
     return stream.writeStream.foreachBatch(merge)
 
@@ -166,9 +161,9 @@ def run_sessionization_batch(
     The complete-mode memory sink accumulates EVERY session on the
     driver — fine for a bounded test backlog, a guaranteed OOM on a
     24/7 production stream. Production deployments must pair
-    ``session_aggregate`` with ``dedup_merge_writer`` (append/update
-    foreachBatch to durable storage); tests/test_streaming.py asserts
-    that path end-to-end."""
+    ``session_aggregate`` with ``dedup_merge_writer`` (an exactly-once
+    foreachBatch merge into a ``txn.TxnTable``); tests/test_streaming.py
+    asserts that path end-to-end."""
     sessions = session_aggregate(stream_events(spark, sf_dir), gap=gap)
     with _state_partitions(spark, state_partitions):
         q = (
@@ -430,57 +425,10 @@ def streaming_frequent_items(
     )
 
 
-def content_dedup_writer(
-    stream: DataFrame,
-    corpus_path: str,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Streaming corpus ingest with content-level dedup: each
-    micro-batch goes through ``operators.dedup.incremental_dedup``
-    against the durable content-hash index, so only never-seen text is
-    appended — the streaming form of the batch ingest-dedup operator.
-
-    Index state is (content_hash) parquet — hashes only, never bodies,
-    so at 100 TB the index is ~0.01% of corpus bytes and the anti-join
-    side stays broadcast-or-bucket sized.
-
-    Failure contract (plain parquet has no cross-path transaction): the
-    corpus appends BEFORE the index, so a crash between the two writes
-    re-admits that batch's content on replay (duplicate corpus rows,
-    never lost rows). Recovery is mechanical — rebuild the index from
-    the corpus (`SELECT DISTINCT hash64(text)`) — and an atomic sink
-    (Delta/Iceberg) collapses the window entirely; the plan shape is
-    unchanged.
-    """
-    from terrorblade_spark.operators.dedup import incremental_dedup
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
-        spark = batch_df.sparkSession
-        try:
-            index = spark.read.parquet(index_path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e):
-                raise  # unreadable-but-existing index must fail the stream
-            index = None
-        admitted, new_index = incremental_dedup(batch_df, index, id_col, text_col)
-        admitted = admitted.persist()
-        try:
-            admitted.drop("content_hash").write.mode("append").parquet(corpus_path)
-            new_index.write.mode("append").parquet(index_path)
-        finally:
-            admitted.unpersist()
-
-    return stream.writeStream.foreachBatch(merge)
-
-
 def neardup_dedup_writer(
     stream: DataFrame,
-    corpus_path: str,
-    index_path: str,
+    corpus_table,
+    writer_id: str,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 16,
@@ -488,9 +436,10 @@ def neardup_dedup_writer(
     shingle_n: int = 3,
 ):
     """Streaming NEAR-dup ingest gate: each micro-batch is MinHash-LSH
-    banded and admitted only if no band collides with the durable band
-    index — the streaming form of ``minhash_lsh_candidates``, applied
-    at ingest so near-duplicate content never lands in the corpus.
+    banded and admitted only if no band collides with the corpus's
+    band index — the streaming form of ``minhash_lsh_candidates``,
+    applied at ingest so near-duplicate content never lands in the
+    corpus.
 
     Admission rule, deterministic and single-pass (no per-batch
     connected-components driver loop):
@@ -504,33 +453,45 @@ def neardup_dedup_writer(
     - docs too short to shingle have no bands: always admitted, never
       indexed (they cannot near-dup-collide).
 
-    Index state is (band, band_hash) longs for ADMITTED docs only, so
-    it grows with canonical content, not corpus size. Failure contract
-    matches ``content_dedup_writer``: corpus appends before index, so
-    a crash between writes re-admits (duplicates, never loses) one
-    batch on replay; rebuild = re-band the corpus.
+    The admitted rows land in ``corpus_table`` (a ``txn.TxnTable``)
+    with their band keys as a ``band_keys`` column, in ONE commit that
+    also carries the batch marker: replay is a no-op, and the band
+    index is the corpus's own stored column (as ``content_dedup_writer``
+    uses ``content_hash``), so it grows with canonical content and can
+    never disagree with the corpus. ``writer_id``: see
+    ``txn_append_writer``.
     """
+    from pyspark.sql import Window
+
     from terrorblade_spark.operators.dedup import _minhash_core, lsh_band_keys
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors.exceptions.captured import AnalysisException
-
+        applied_id = f"{writer_id}/batch_{batch_id}"
+        if corpus_table.applied(applied_id):
+            return
         spark = batch_df.sparkSession
         try:
-            index = spark.read.parquet(index_path)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
+            index = corpus_table.read(spark).select(
+                F.explode("band_keys").alias("bk")
+            ).select("bk.band", "bk.band_hash")
+        except FileNotFoundError:
             index = None
 
-        sig = _minhash_core(batch_df, id_col, text_col, num_hashes, shingle_n).select(
-            F.col(id_col).alias("doc"), F.col("signature").alias("sig")
+        # per-doc band keys; docs too short to shingle have no row
+        keyed = (
+            _minhash_core(batch_df, id_col, text_col, num_hashes, shingle_n)
+            .select(
+                F.col(id_col).alias("doc"),
+                lsh_band_keys(F.col("signature"), bands, num_hashes // bands).alias(
+                    "band_keys"
+                ),
+            )
+            .persist()
         )
-        banded = sig.select(
-            "doc", F.explode(lsh_band_keys(F.col("sig"), bands, num_hashes // bands)).alias("bk")
-        ).select("doc", F.col("bk.band").alias("band"), F.col("bk.band_hash").alias("band_hash"))
-        banded = banded.persist()
         try:
+            banded = keyed.select("doc", F.explode("band_keys").alias("bk")).select(
+                "doc", "bk.band", "bk.band_hash"
+            )
             if index is not None:
                 # any band collision with the corpus index -> rejected
                 hit = (
@@ -538,44 +499,25 @@ def neardup_dedup_writer(
                     .select("doc")
                     .distinct()
                 )
-                fresh = banded.join(hit, "doc", "left_anti")
-            else:
-                fresh = banded
+                banded = banded.join(hit, "doc", "left_anti")
             # within-batch: admitted iff min id in EVERY occupied bucket
-            from pyspark.sql import Window
-
             wmin = Window.partitionBy("band", "band_hash")
             admit_ids = (
-                fresh.withColumn("min_doc", F.min("doc").over(wmin))
+                banded.withColumn("min_doc", F.min("doc").over(wmin))
                 .groupBy("doc")
                 .agg(F.max((F.col("doc") != F.col("min_doc")).cast("int")).alias("beaten"))
                 .where(F.col("beaten") == 0)
-                .select("doc")
+                .select(F.col("doc").alias(id_col))
             )
-            banded_docs = banded.select("doc").distinct()
-            admitted = (
-                batch_df.join(
-                    banded_docs.withColumnRenamed("doc", id_col), id_col, "left_anti"
-                )  # unshingleable: always admitted
-                .unionByName(
-                    batch_df.join(
-                        admit_ids.withColumnRenamed("doc", id_col), id_col, "leftsemi"
-                    )
-                )
-                .persist()
+            rows = batch_df.join(keyed.withColumnRenamed("doc", id_col), id_col, "left")
+            admitted = rows.where(F.col("band_keys").isNull()).unionByName(
+                rows.join(admit_ids, id_col, "leftsemi")
             )
-            try:
-                admitted.write.mode("append").parquet(corpus_path)
-                new_bands = banded.join(
-                    admit_ids, "doc", "leftsemi"
-                ).select("band", "band_hash")
-                new_bands.write.mode("append").parquet(index_path)
-            finally:
-                # unpersist on failure too: foreachBatch retries would
-                # otherwise accumulate pinned datasets
-                admitted.unpersist()
+            corpus_table.append(admitted, applied_id=applied_id)
         finally:
-            banded.unpersist()
+            # unpersist on failure too: foreachBatch retries would
+            # otherwise accumulate pinned datasets
+            keyed.unpersist()
 
     return stream.writeStream.foreachBatch(merge)
 
@@ -584,11 +526,11 @@ def txn_append_writer(stream: DataFrame, table, writer_id: str):
     """Exactly-once streaming append into a ``txn.TxnTable``: the
     micro-batch's rows and its batch-id marker commit in ONE atomic
     manifest swap, so a replayed batch (restart after a crash anywhere
-    around the write) is a no-op — the transactional upgrade of
-    ``dedup_merge_writer``'s read-back anti-join recipe, and the same
-    contract Delta's idempotent `txnAppId`/`txnVersion` sink options
-    provide. No read of existing data per batch: the replay check is a
-    manifest-side id lookup, O(1) vs the anti-join's scan.
+    around the write) is a no-op — the same contract Delta's
+    idempotent `txnAppId`/`txnVersion` sink options provide. No read
+    of existing data per batch: the replay check is a manifest-side id
+    lookup, O(1) vs ``dedup_merge_writer``'s anti-join scan (which
+    this sink skips, so it admits keys already in the table).
 
     ``writer_id`` is the Delta ``txnAppId`` analog and is REQUIRED:
     batch ids alone are query-local, so two queries feeding one table —
@@ -603,26 +545,27 @@ def txn_append_writer(stream: DataFrame, table, writer_id: str):
     return stream.writeStream.foreachBatch(append)
 
 
-def txn_content_dedup_writer(
+def content_dedup_writer(
     stream: DataFrame,
     corpus_table,
     writer_id: str,
     id_col: str = "doc_id",
     text_col: str = "text",
 ):
-    """Content-dedup streaming ingest with the crash window CLOSED:
-    where ``content_dedup_writer`` appends corpus and hash-index under
-    two non-atomic writes (documented re-admission window between
-    them), here the admitted rows — WITH their ``content_hash`` column
-    — land in one ``txn.TxnTable`` commit that also carries the batch
-    marker: replay is a no-op, and the "index" is the corpus table's
-    own stored hash column (a column-pruned narrow scan; at 100 TB
-    bucket the table by ``content_hash`` so the per-batch anti-join is
-    index-side-pruned like the separate-index recipe, without the
-    second write that broke atomicity). ``writer_id`` is the Delta
-    txnAppId analog (see ``txn_append_writer``): REQUIRED so distinct
-    queries or a fresh checkpoint never collide on query-local batch
-    ids."""
+    """Streaming corpus ingest with content-level dedup: each
+    micro-batch goes through ``operators.dedup.incremental_dedup``
+    against the corpus's content hashes, so only never-seen text is
+    appended — the streaming form of the batch ingest-dedup operator.
+
+    The admitted rows — WITH their ``content_hash`` column — land in
+    one ``txn.TxnTable`` commit that also carries the batch marker:
+    replay is a no-op, and the "index" is the corpus table's own
+    stored hash column (a column-pruned narrow scan; at 100 TB bucket
+    the table by ``content_hash`` so the per-batch anti-join is
+    index-side-pruned, with no second write to keep in step).
+    ``writer_id`` is the Delta txnAppId analog (see
+    ``txn_append_writer``): REQUIRED so distinct queries or a fresh
+    checkpoint never collide on query-local batch ids."""
     from terrorblade_spark.operators.dedup import incremental_dedup
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -653,7 +596,7 @@ def semantic_ingest_writer(
 ):
     """Streaming form of the incremental SEMANTIC dedup gate
     (operators/dedup.semantic_dedup_incremental), the embedding-space
-    sibling of ``txn_content_dedup_writer``: each micro-batch is gated
+    sibling of ``content_dedup_writer``: each micro-batch is gated
     against the canonical state accumulated by every PRIOR batch —
     near-duplicates of admitted canonicals (or of an earlier-id row in
     the same batch) are dropped; survivors' probe-cell state rows land
@@ -670,7 +613,7 @@ def semantic_ingest_writer(
     state table is the product, not operator state), the same contract
     as the content-hash corpus table. The exact-duplicate mega-group
     guard (``max_exact_group``) applies per micro-batch: route streams
-    with heavy exact duplication through ``txn_content_dedup_writer``
+    with heavy exact duplication through ``content_dedup_writer``
     (or the hash gate) first, per the ordering contract.
     """
     from terrorblade_spark.operators.dedup import semantic_ingest_txn

@@ -30,8 +30,10 @@ Design (the public Delta-log recipe):
 * Exactly-once streaming folds: a commit optionally records an
   ``applied_id``. Replaying a delivered micro-batch sees its id in the
   committed chain and skips — the marker and the state change are ONE
-  atomic commit, closing the marker-after-write crash window of the
-  non-transactional recipe (operators/rollup.py rollup_merge_fn).
+  atomic commit, so no crash window separates them (a marker written
+  after the state double-applies a batch that crashes in between).
+  The rollup state and the streaming ingest sinks commit this way
+  (operators/rollup.py, streaming/pipeline.py).
 
 Scale notes: the manifest holds one entry per live data directory (or
 per partition subdir), not per row — thousands of entries is a small

@@ -1,17 +1,13 @@
-"""Incremental materialized rollup: batch-fold equals direct
-aggregate, bucket-pruned state rewrites, replay idempotence."""
+"""Incremental materialized rollup over a ``txn.TxnTable``: batch-fold
+equals direct aggregate, bucket-pruned state rewrites, replay
+idempotence, and the rebucketing guard."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from terrorblade_spark.operators.rollup import (
-    BUCKET_COL,
-    rollup_read,
-    rollup_update,
-)
+from terrorblade_spark.operators.rollup import rollup_read, rollup_update
+from terrorblade_spark.txn import TxnTable
 
 
 def _events(spark, lo, hi):
@@ -24,7 +20,7 @@ def _events(spark, lo, hi):
 
 
 def test_incremental_folds_equal_direct_aggregate(spark, tmp_path):
-    state = str(tmp_path / "rollup")
+    state = TxnTable(str(tmp_path / "rollup"))
     batches = [(0, 4_000), (4_000, 7_000), (7_000, 12_000)]
     for lo, hi in batches:
         rollup_update(
@@ -67,42 +63,34 @@ def test_incremental_folds_equal_direct_aggregate(spark, tmp_path):
 
 
 def test_update_rewrites_only_touched_buckets(spark, tmp_path):
-    state = str(tmp_path / "state")
+    state = TxnTable(str(tmp_path / "state"))
     rollup_update(_events(spark, 0, 5_000), state, keys=["user_id"], n_buckets=16)
 
-    # record per-partition file listings, then fold a batch touching ONE key
+    # record each bucket's data files, then fold a batch touching ONE key
     def listing():
-        out = {}
-        for d in os.listdir(state):
-            if d.startswith(f"{BUCKET_COL}="):
-                p = os.path.join(state, d)
-                out[d] = sorted(
-                    (f, os.path.getmtime(os.path.join(p, f)))
-                    for f in os.listdir(p)
-                    if f.endswith(".parquet")
-                )
-        return out
+        return {
+            tuple(e["partition"].items()): e["path"] for e in state.latest().entries
+        }
 
     before = listing()
     one_key = _events(spark, 0, 5_000).where(F.col("user_id") == 3)
     rollup_update(one_key, state, keys=["user_id"], n_buckets=16)
     after = listing()
 
-    changed = [d for d in before if before[d] != after.get(d)]
+    assert set(after) == set(before)
+    changed = [d for d in before if before[d] != after[d]]
     assert len(changed) == 1  # exactly user 3's bucket was rewritten
-    untouched = [d for d in before if d not in changed]
-    assert untouched and all(before[d] == after[d] for d in untouched)
+    assert len(before) > 1  # the other buckets kept their files
 
 
 def test_merge_fn_skips_replayed_batches(spark, tmp_path):
     from terrorblade_spark.operators.rollup import rollup_merge_fn
 
-    state = str(tmp_path / "stream_state")
-    applied = str(tmp_path / "applied")
+    state = TxnTable(str(tmp_path / "stream_state"))
     batch = _events(spark, 0, 2_000)
 
     # the exact closure foreachBatch runs, under an at-least-once replay
-    merge = rollup_merge_fn(state, keys=["user_id"], applied_dir=applied, sum_cols=["value"])
+    merge = rollup_merge_fn(state, keys=["user_id"], writer_id="w1", sum_cols=["value"])
     merge(batch, 0)
     merge(batch, 0)  # replay of the same micro-batch: must be a no-op
     merge(batch, 1)  # a NEW batch id folds in
@@ -117,7 +105,16 @@ def test_merge_fn_skips_replayed_batches(spark, tmp_path):
 def test_rebucketing_is_refused(spark, tmp_path):
     import pytest
 
-    state = str(tmp_path / "guard")
+    state = TxnTable(str(tmp_path / "guard"))
     rollup_update(_events(spark, 0, 1_000), state, keys=["user_id"], n_buckets=16)
-    with pytest.raises(ValueError, match="n_buckets=16"):
-        rollup_update(_events(spark, 0, 1_000), state, keys=["user_id"], n_buckets=8)
+    versions = state.history()
+    # the guard reads the manifest on the driver: no Spark job runs
+    sc = spark.sparkContext
+    sc.setJobGroup("rollup-rebucket", "rollup-rebucket")
+    try:
+        with pytest.raises(ValueError, match="n_buckets=16"):
+            rollup_update(_events(spark, 0, 1_000), state, keys=["user_id"], n_buckets=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("rollup-rebucket") == []
+    assert state.history() == versions

@@ -117,3 +117,55 @@ def test_text_and_hybrid_search_tools(dispatcher):
         dispatcher.call("text_search", query="  ")
     with _pt.raises(ValueError):
         dispatcher.call("hybrid_search", query="x", top_k=0)
+
+
+def test_mcp_wrappers_match_tool_specs(monkeypatch):
+    """``build_mcp_server`` binds one typed wrapper per TOOL_SPECS entry
+    (FastMCP derives each tool's schema from it): each wrapper's
+    parameters and defaults are the spec's, and a call with the spec
+    defaults reaches a dispatcher handler that accepts its arguments.
+    ``mcp`` is optional, so a stub stands in for FastMCP."""
+    import inspect
+    import sys
+    import types
+
+    from terrorblade_spark import serving
+
+    class FastMCP:
+        def __init__(self, name):
+            self.tools = {}
+
+        def add_tool(self, fn, name, description):
+            self.tools[name] = fn
+
+    fastmcp = types.ModuleType("mcp.server.fastmcp")
+    fastmcp.FastMCP = FastMCP
+    monkeypatch.setitem(sys.modules, "mcp", types.ModuleType("mcp"))
+    monkeypatch.setitem(sys.modules, "mcp.server", types.ModuleType("mcp.server"))
+    monkeypatch.setitem(sys.modules, "mcp.server.fastmcp", fastmcp)
+
+    calls = []
+
+    def call(self, name, **kwargs):
+        # an argument the real handler does not take raises TypeError
+        inspect.signature(getattr(serving.ToolDispatcher, f"_tool_{name}")).bind(
+            self, **kwargs
+        )
+        calls.append((name, kwargs))
+
+    monkeypatch.setattr(serving.ToolDispatcher, "call", call)
+    server = serving.build_mcp_server(None)
+
+    assert set(server.tools) == {s["name"] for s in TOOL_SPECS}
+    given = {"query": "hello", "chat_id": 1, "group_id": 0}
+    for spec in TOOL_SPECS:
+        props = spec["parameters"]["properties"]
+        params = inspect.signature(server.tools[spec["name"]]).parameters
+        assert list(params) == list(props), spec["name"]
+        defaults = {k: p["default"] for k, p in props.items() if "default" in p}
+        assert {
+            k: p.default for k, p in params.items() if p.default is not p.empty
+        } == defaults, spec["name"]
+        args = {k: given[k] for k in spec["parameters"]["required"]}
+        server.tools[spec["name"]](**args)
+        assert calls[-1] == (spec["name"], defaults | args)

@@ -1,6 +1,8 @@
-"""Streaming pipeline tests: the production foreachBatch dedup-merge
-path (idempotent INSERT-OR-IGNORE sink) — the memory-sink batch runners
-are test harnesses and are exercised via q47/q57's oracle rows instead.
+"""Streaming pipeline tests: the production foreachBatch sinks — each
+commits to a ``txn.TxnTable`` together with its batch marker, so a
+replayed micro-batch adds nothing — and the stateful streaming
+operators. The memory-sink batch runners are test harnesses and are
+exercised via q47/q57's oracle rows instead.
 """
 
 from __future__ import annotations
@@ -10,6 +12,7 @@ from pyspark.sql import functions as F
 
 from terrorblade_spark.streaming.pipeline import dedup_merge_writer, stream_events
 from terrorblade_spark.tables import load_table
+from terrorblade_spark.txn import TxnTable
 
 
 def _drain(writer, checkpoint: str) -> None:
@@ -22,17 +25,18 @@ def _drain(writer, checkpoint: str) -> None:
 
 
 def test_dedup_merge_writer_is_idempotent(spark, sf_dir, tmp_path):
-    # replaying the SAME backlog through a fresh checkpoint must add
-    # zero rows: the anti-join drops every already-present key
-    target = str(tmp_path / "target")
+    # replaying the SAME backlog through a fresh checkpoint (and so a
+    # new writer id) must add zero rows: the anti-join drops every
+    # already-present key
+    target = TxnTable(str(tmp_path / "target"))
     for i in range(2):
         _drain(
             dedup_merge_writer(
-                stream_events(spark, sf_dir), target, keys=["event_id"]
+                stream_events(spark, sf_dir), target, keys=["event_id"], writer_id=f"w{i}"
             ),
             str(tmp_path / f"cp{i}"),
         )
-    got = spark.read.parquet(target).count()
+    got = target.read(spark).count()
     want = load_table(spark, sf_dir, "events").count()
     assert got == want
 
@@ -41,12 +45,17 @@ def test_dedup_merge_writer_raises_on_unreadable_target(spark, sf_dir, tmp_path)
     # a target that EXISTS but cannot be read is NOT "first batch":
     # falling through to a blind append would break idempotency, so the
     # writer must propagate the error and fail the stream
+    import shutil
+
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    target = tmp_path / "broken"
-    target.mkdir()  # empty dir -> UNABLE_TO_INFER_SCHEMA, not PATH_NOT_FOUND
+    target = TxnTable(str(tmp_path / "broken"))
+    target.append(load_table(spark, sf_dir, "events").limit(5))
+    # the manifest now names a data directory that is gone
+    shutil.rmtree(target.latest().entries[0]["path"])
+    versions = target.history()
     writer = dedup_merge_writer(
-        stream_events(spark, sf_dir), str(target), keys=["event_id"]
+        stream_events(spark, sf_dir), target, keys=["event_id"], writer_id="w1"
     )
     q = (
         writer.option("checkpointLocation", str(tmp_path / "cp"))
@@ -55,6 +64,7 @@ def test_dedup_merge_writer_raises_on_unreadable_target(spark, sf_dir, tmp_path)
     )
     with pytest.raises(StreamingQueryException):
         q.awaitTermination()
+    assert target.history() == versions  # nothing was appended
 
 
 def test_content_dedup_writer_cross_batch_and_restart(spark, tmp_path):
@@ -62,7 +72,7 @@ def test_content_dedup_writer_cross_batch_and_restart(spark, tmp_path):
 
     src = tmp_path / "src"
     src.mkdir()
-    corpus, index = str(tmp_path / "corpus"), str(tmp_path / "index")
+    corpus = TxnTable(str(tmp_path / "corpus"))
     schema = "doc_id long, text string"
 
     def arrive(rows, name):
@@ -75,20 +85,21 @@ def test_content_dedup_writer_cross_batch_and_restart(spark, tmp_path):
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
         str(src) + "/*"
     )
-    _drain(content_dedup_writer(stream, corpus, index), str(tmp_path / "cp0"))
-    got1 = {(r["doc_id"], r["text"]) for r in spark.read.parquet(corpus).collect()}
+    _drain(content_dedup_writer(stream, corpus, "w0"), str(tmp_path / "cp0"))
+    got1 = {(r["doc_id"], r["text"]) for r in corpus.read(spark).collect()}
     assert got1 == {(1, "alpha"), (3, "beta")}
 
     # batch 2 arrives: one known text, one new
     arrive([(10, "alpha"), (11, "gamma")], "b2")
-    _drain(content_dedup_writer(stream, corpus, index), str(tmp_path / "cp0"))
-    texts = sorted(r["text"] for r in spark.read.parquet(corpus).collect())
+    _drain(content_dedup_writer(stream, corpus, "w0"), str(tmp_path / "cp0"))
+    texts = sorted(r["text"] for r in corpus.read(spark).collect())
     assert texts == ["alpha", "beta", "gamma"]
 
-    # full replay from a fresh checkpoint admits nothing new
-    _drain(content_dedup_writer(stream, corpus, index), str(tmp_path / "cp1"))
-    assert spark.read.parquet(corpus).count() == 3
-    assert spark.read.parquet(index).distinct().count() == 3
+    # full replay from a fresh checkpoint, under a new writer id so the
+    # batch markers do not apply: the content-hash gate admits nothing
+    _drain(content_dedup_writer(stream, corpus, "w1"), str(tmp_path / "cp1"))
+    assert corpus.read(spark).count() == 3
+    assert corpus.read(spark).select("content_hash").distinct().count() == 3
 
 
 def test_neardup_dedup_writer_cross_batch_and_chains(spark, tmp_path):
@@ -96,7 +107,7 @@ def test_neardup_dedup_writer_cross_batch_and_chains(spark, tmp_path):
 
     src = tmp_path / "ndsrc"
     src.mkdir()
-    corpus, index = str(tmp_path / "ndcorpus"), str(tmp_path / "ndindex")
+    corpus = TxnTable(str(tmp_path / "ndcorpus"))
     schema = "doc_id long, text string"
     base = "the quick brown fox jumps over the lazy dog again and again today"
 
@@ -110,6 +121,9 @@ def test_neardup_dedup_writer_cross_batch_and_chains(spark, tmp_path):
             str(src) + "/*"
         )
 
+    def doc_ids():
+        return sorted(r["doc_id"] for r in corpus.read(spark).collect())
+
     # batch 1: a near-dup pair (1,2), an unrelated doc, a too-short doc
     arrive(
         [
@@ -120,10 +134,9 @@ def test_neardup_dedup_writer_cross_batch_and_chains(spark, tmp_path):
         ],
         "b1",
     )
-    _drain(neardup_dedup_writer(stream(), corpus, index), str(tmp_path / "ndcp0"))
-    got1 = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
+    _drain(neardup_dedup_writer(stream(), corpus, "w0"), str(tmp_path / "ndcp0"))
     # min-id representative of the near-dup pair + unrelated + unshingleable
-    assert got1 == [1, 3, 4]
+    assert doc_ids() == [1, 3, 4]
 
     # batch 2: near-dup of already-ingested content + genuinely new
     arrive(
@@ -133,37 +146,35 @@ def test_neardup_dedup_writer_cross_batch_and_chains(spark, tmp_path):
         ],
         "b2",
     )
-    _drain(neardup_dedup_writer(stream(), corpus, index), str(tmp_path / "ndcp0"))
-    got2 = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
-    assert got2 == [1, 3, 4, 11]
+    _drain(neardup_dedup_writer(stream(), corpus, "w0"), str(tmp_path / "ndcp0"))
+    assert doc_ids() == [1, 3, 4, 11]
 
-    # replay from a fresh checkpoint: band index rejects everything known
-    _drain(neardup_dedup_writer(stream(), corpus, index), str(tmp_path / "ndcp1"))
+    # replay from a fresh checkpoint under a new writer id: the band
+    # index rejects everything known
+    _drain(neardup_dedup_writer(stream(), corpus, "w1"), str(tmp_path / "ndcp1"))
     # unshingleable docs carry no bands -> re-admitted on full replay
-    assert sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect()) == [
-        1, 3, 4, 4, 11,
-    ]
+    assert doc_ids() == [1, 3, 4, 4, 11]
 
-    # index holds bands for admitted shingleable docs only (3 of them)
-    assert spark.read.parquet(index).distinct().count() <= 3 * 4
+    # the band index holds bands for admitted shingleable docs only (3 of them)
+    bands = corpus.read(spark).select(F.explode("band_keys")).distinct()
+    assert bands.count() <= 3 * 4
 
 
 def test_rollup_writer_maintains_aggregates_from_stream(spark, sf_dir, tmp_path):
     """End-to-end: the incremental rollup maintained by a real stream
     (availableNow backlog) equals the direct batch aggregate, and a
-    checkpointed restart over the same backlog adds nothing (batch-id
-    markers make the foreachBatch merge replay-safe)."""
+    restart over the same backlog from a fresh checkpoint, under the
+    same writer id, adds nothing (each batch id commits with its fold)."""
     from terrorblade_spark.operators.rollup import rollup_read, rollup_writer
 
-    state = str(tmp_path / "rollup_state")
-    applied = str(tmp_path / "applied")
+    state = TxnTable(str(tmp_path / "rollup_state"))
     for i in range(2):  # second drain = fresh checkpoint replays backlog
         _drain(
             rollup_writer(
                 stream_events(spark, sf_dir),
                 state,
                 keys=["user_id"],
-                applied_dir=applied,
+                writer_id="w1",
                 sum_cols=["value"],
             ),
             str(tmp_path / f"cp{i}"),
@@ -348,7 +359,6 @@ def test_txn_append_writer_exactly_once_across_replay(spark, tmp_path):
     import os
 
     from terrorblade_spark.streaming.pipeline import txn_append_writer
-    from terrorblade_spark.txn import TxnTable
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -392,8 +402,7 @@ def test_txn_content_dedup_writer_closes_replay_window(spark, tmp_path):
     stored column."""
     import os
 
-    from terrorblade_spark.streaming.pipeline import txn_content_dedup_writer
-    from terrorblade_spark.txn import TxnTable
+    from terrorblade_spark.streaming.pipeline import content_dedup_writer
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -411,7 +420,7 @@ def test_txn_content_dedup_writer_closes_replay_window(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    q = txn_content_dedup_writer(stream, t, "w1").option(
+    q = content_dedup_writer(stream, t, "w1").option(
         "checkpointLocation", str(tmp_path / "ckpt")
     ).trigger(availableNow=True).start()
     q.awaitTermination(120)
@@ -443,7 +452,6 @@ def test_semantic_ingest_writer_gates_across_batches(spark, tmp_path):
 
     from terrorblade_spark.operators.dedup import semantic_dedup_incremental
     from terrorblade_spark.streaming.pipeline import semantic_ingest_writer
-    from terrorblade_spark.txn import TxnTable
 
     def rot(theta, i, j):
         v = [0.0] * 4
@@ -496,6 +504,64 @@ def test_semantic_ingest_writer_gates_across_batches(spark, tmp_path):
     )
     assert readd.count() == 0
     assert t.read(spark).count() == 6
+
+
+_DOCS = (
+    "doc_id long, text string",
+    [
+        [(1, "the quick brown fox jumps over the lazy dog"), (2, "short")],
+        [(3, "spark shuffles parquet files between the executors all day")],
+    ],
+)
+_VECS = (
+    "vec_id long, embedding array<double>",
+    [[(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0])], [(3, [0.0, 0.0, 1.0])]],
+)
+
+
+def _semantic_writer(stream, table, writer_id):
+    from terrorblade_spark.streaming.pipeline import semantic_ingest_writer
+
+    cents = stream.sparkSession.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])], "list_id int, centroid array<double>"
+    )
+    return semantic_ingest_writer(stream, table, cents, writer_id)
+
+
+def _sinks():
+    from terrorblade_spark.operators.rollup import rollup_writer
+    from terrorblade_spark.streaming import pipeline as P
+
+    return {
+        "txn_append_writer": (_DOCS, P.txn_append_writer),
+        "dedup_merge_writer": (_DOCS, lambda s, t, w: P.dedup_merge_writer(s, t, ["doc_id"], w)),
+        "content_dedup_writer": (_DOCS, P.content_dedup_writer),
+        "neardup_dedup_writer": (_DOCS, P.neardup_dedup_writer),
+        "rollup_writer": (_DOCS, lambda s, t, w: rollup_writer(s, t, ["doc_id"], w)),
+        "semantic_ingest_writer": (_VECS, _semantic_writer),
+    }
+
+
+@pytest.mark.parametrize("sink", list(_sinks()))
+def test_sink_replay_under_same_writer_id_commits_nothing(spark, tmp_path, sink):
+    """Every stateful sink is exactly-once: draining the same backlog
+    again from a fresh checkpoint, under the same writer id, re-delivers
+    batch ids whose markers are already committed — the table's history
+    must not grow."""
+    (schema, batches), make = _sinks()[sink]
+    src = tmp_path / "src"
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src / f"f{i}"))
+    table = TxnTable(str(tmp_path / "t"))
+    history = []
+    for i in range(2):
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
+            f"{src}/*"
+        )
+        _drain(make(stream, table, "w1"), str(tmp_path / f"cp{i}"))
+        history.append(table.history())
+    assert len(history[0]) == len(batches)  # one commit per micro-batch
+    assert history[1] == history[0]
 
 
 def test_stateful_update_handles_timeout_and_late_events(spark):

@@ -142,16 +142,13 @@ def test_compact_bounds_manifest_entries(spark, tmp_path):
 def test_rollup_txn_exactly_once_under_crash_replay(spark, tmp_path):
     """The closed crash window: simulate a writer that dies after the
     state write half (data files written, no commit) and a restart that
-    replays the same batch — the fold must apply exactly once, unlike
-    the marker-file recipe where this window double-counts."""
-    from terrorblade_spark.operators.rollup import (
-        rollup_read_txn,
-        rollup_update_txn,
-    )
+    replays the same batch — the fold must apply exactly once (a
+    marker written after the state would double-count here)."""
+    from terrorblade_spark.operators.rollup import rollup_read, rollup_update
 
     t = TxnTable(str(tmp_path / "state"))
     b0 = _df(spark, [("a", 1), ("b", 2)], "g string, x long")
-    rollup_update_txn(b0, t, keys=["g"], sum_cols=["x"], applied_id="batch_0")
+    rollup_update(b0, t, keys=["g"], sum_cols=["x"], applied_id="batch_0")
 
     b1 = _df(spark, [("a", 10)], "g string, x long")
     # crash half: data written, commit skipped (manifest untouched)
@@ -159,15 +156,15 @@ def test_rollup_txn_exactly_once_under_crash_replay(spark, tmp_path):
     assert not t.applied("batch_1")
 
     # restart: replay batch 1 twice (delivery + a second replay)
-    rollup_update_txn(b1, t, keys=["g"], sum_cols=["x"], applied_id="batch_1")
-    rollup_update_txn(b1, t, keys=["g"], sum_cols=["x"], applied_id="batch_1")
+    rollup_update(b1, t, keys=["g"], sum_cols=["x"], applied_id="batch_1")
+    rollup_update(b1, t, keys=["g"], sum_cols=["x"], applied_id="batch_1")
 
-    got = {r["g"]: (r["n_rows"], r["sum_x"]) for r in rollup_read_txn(spark, t).collect()}
+    got = {r["g"]: (r["n_rows"], r["sum_x"]) for r in rollup_read(spark, t).collect()}
     assert got == {"a": (2, 11), "b": (1, 2)}
 
 
 def test_rollup_txn_matches_direct_aggregate(spark, tmp_path):
-    from terrorblade_spark.operators.rollup import rollup_read_txn, rollup_update_txn
+    from terrorblade_spark.operators.rollup import rollup_read, rollup_update
 
     t = TxnTable(str(tmp_path / "state"))
     batches = [
@@ -178,7 +175,7 @@ def test_rollup_txn_matches_direct_aggregate(spark, tmp_path):
     full = []
     for i, rows in enumerate(batches):
         full.extend(rows)
-        rollup_update_txn(
+        rollup_update(
             _df(spark, rows, "g string, x long"), t, keys=["g"],
             sum_cols=["x"], min_cols=["x"], max_cols=["x"], applied_id=f"b{i}",
         )
@@ -194,7 +191,7 @@ def test_rollup_txn_matches_direct_aggregate(spark, tmp_path):
     }
     folded = {
         r["g"]: (r["n_rows"], r["sum_x"], r["min_x"], r["max_x"])
-        for r in rollup_read_txn(spark, t).collect()
+        for r in rollup_read(spark, t).collect()
     }
     assert folded == direct
 
@@ -323,7 +320,7 @@ def test_concurrent_rollup_writers_no_lost_update(spark, tmp_path):
     (the loser re-reads and re-merges instead of overwriting)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from terrorblade_spark.operators.rollup import rollup_read_txn, rollup_update_txn
+    from terrorblade_spark.operators.rollup import rollup_read, rollup_update
 
     t = TxnTable(str(tmp_path / "state"))
     batches = [
@@ -332,7 +329,7 @@ def test_concurrent_rollup_writers_no_lost_update(spark, tmp_path):
 
     def fold(arg):
         wid, rows = arg
-        rollup_update_txn(
+        rollup_update(
             _df(spark, rows, "g string, x long"), t,
             keys=["g"], sum_cols=["x"], applied_id=wid,
         )
@@ -340,7 +337,7 @@ def test_concurrent_rollup_writers_no_lost_update(spark, tmp_path):
     with ThreadPoolExecutor(max_workers=6) as ex:
         list(ex.map(fold, batches))
 
-    got = {r["g"]: (r["n_rows"], r["sum_x"]) for r in rollup_read_txn(spark, t).collect()}
+    got = {r["g"]: (r["n_rows"], r["sum_x"]) for r in rollup_read(spark, t).collect()}
     assert got == {"a": (6, 6), "b": (6, sum(range(6)))}
 
 

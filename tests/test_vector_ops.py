@@ -561,11 +561,7 @@ def test_ivf_txn_incremental_append_serves_new_vectors(spark, sf_dir, tmp_path):
     batch (assigned to trained lists, exactly-once) -> a query finds
     the new vector; old results unchanged; pruning preserved
     (per-partition manifest entries, no unpartitioned blob)."""
-    from terrorblade_spark.operators.models import (
-        ivf_append_txn,
-        load_ivf_txn,
-        save_ivf_txn,
-    )
+    from terrorblade_spark.operators.models import ivf_append_txn, load_ivf, save_ivf
     from terrorblade_spark.operators.vector import ivf_build, ivf_knn_join
     from terrorblade_spark.tables import load_table
     from terrorblade_spark.txn import TxnTable
@@ -573,9 +569,9 @@ def test_ivf_txn_incremental_append_serves_new_vectors(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assigned, cents = ivf_build(emb, n_lists=4, max_iter=5)
     path = str(tmp_path / "ivf")
-    save_ivf_txn(assigned, cents, path)
+    save_ivf(assigned, cents, path)
 
-    a0, c0 = load_ivf_txn(spark, path)
+    a0, c0 = load_ivf(spark, path)
     n0 = a0.count()
 
     # the new batch: an exact copy of an existing vector under a new id
@@ -587,7 +583,7 @@ def test_ivf_txn_incremental_append_serves_new_vectors(spark, sf_dir, tmp_path):
     ivf_append_txn(spark, path, new, applied_id="batch_1")
     ivf_append_txn(spark, path, new, applied_id="batch_1")  # replay no-ops
 
-    a1, c1 = load_ivf_txn(spark, path)
+    a1, c1 = load_ivf(spark, path)
     assert a1.count() == n0 + 1
     q = spark.createDataFrame(
         [(int(probe["vec_id"]), probe["embedding"])],
